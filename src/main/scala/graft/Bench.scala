@@ -149,7 +149,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
 
     // Incrementally collected state: the finally block below serializes
@@ -166,16 +165,9 @@ object Bench {
     def epoch(): Double = System.currentTimeMillis() / 1000.0
 
     try {
-      spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
+      spark = GraftSession.builder()
         .config("spark.sql.warehouse.dir",
           java.nio.file.Files.createTempDirectory("graft_bench_wh_").toString)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       // warmup: JVM/codegen/parquet-footer costs land here, not in query 1
@@ -382,7 +374,7 @@ object Bench {
     val t0 = System.nanoTime()
     graft.migrator.Migrator.migrate(spark, "graft_bench", home, s"$scratch/ledger")
     spark.read.option("header", "true").schema("id INT, name INT")
-      .csv("/root/reference/tests/migrations_seq/test.csv.gz")
+      .csv(Fixtures.seqCsv)
       .write.mode("append").insertInto("graft_bench.sample")
     Files.writeString(Paths.get(s"$home/V2_seq_dmls.json"),
       """["ALTER TABLE graft_bench.sample ADD COLUMN enabled UInt32 DEFAULT 1",

@@ -1,34 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc single-query timing probe: run named catalog queries in
-  * isolation with the bench session config. The isolated reading is the
-  * trustworthy one for queries whose full-bench medians swing with run
-  * ordering (see NOTES_r4 on the Jaccard twins); this replaces the
-  * throwaway probe mains previous rounds kept re-writing.
+  * isolation in a [[GraftSession]] session, as Bench runs them. The
+  * isolated reading is the trustworthy one for queries whose
+  * full-bench medians swing with run ordering (see NOTES_r4 on the
+  * Jaccard twins); this replaces the throwaway probe mains previous
+  * rounds kept re-writing.
   *
   *   sbt "runMain graft.Probe bm25_topk corpus_curation"
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default
-  * 32 — the driver bench's value, not Bench.scala's default 4),
-  * SPARK_GRAFT_BENCH_REPS (default 4).
+  * the core count, see [[GraftSession]]), SPARK_GRAFT_BENCH_REPS
+  * (default 4).
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Probe <queryName>...")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$dir/lineitem.parquet").count() // warmup, as Bench
     args.foreach { name =>

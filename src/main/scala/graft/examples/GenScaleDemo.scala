@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** The curation pipeline driven END-TO-END by the `graft-docs`
   * generator at a size the checked-in testdata never reaches — the
@@ -27,15 +28,7 @@ object GenScaleDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_genscale")
     val n = args.lift(1).map(_.toLong).getOrElse(100000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("GenScaleDemo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("GenScaleDemo").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t0 = System.nanoTime()

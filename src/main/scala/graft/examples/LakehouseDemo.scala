@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.sources.SnapshotLog
 
 /** The snapshot log as a complete table-format minimum, end-to-end —
@@ -45,13 +45,7 @@ import graft.sources.SnapshotLog
 object LakehouseDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_lakehouse")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("LakehouseDemo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("LakehouseDemo").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val t = s"$outDir/lake/events"

@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.sources.SnapshotLog
 
 /** Runnable tour of the round-17 catalog surfaces — table LIFECYCLE
@@ -19,13 +19,8 @@ import graft.sources.SnapshotLog
 object LifecycleDemo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_lifecycle")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+    val spark = GraftSession.builder()
       .appName("LifecycleDemo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.catalog.lake", "graft.sources.SnapshotCatalog")
       .config("spark.sql.catalog.lake.root", outDir)
       .getOrCreate()

@@ -2,8 +2,7 @@ package graft.examples
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.migrator.{Migrator, Observability}
 
 /** End-to-end demo of the public API: runs the reference's own fixture
@@ -16,11 +15,8 @@ import graft.migrator.{Migrator, Observability}
 object MigrateDemo {
   def main(args: Array[String]): Unit = {
     val scratch = args.headOption.getOrElse("/tmp/graft_demo")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.builder()
       .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

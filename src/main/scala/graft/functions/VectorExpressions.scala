@@ -729,6 +729,18 @@ object HhItem {
 object BpeNorm {
   private val digitMap: Array[Byte] = "qwertyuiop".getBytes("US-ASCII")
 
+  /** Wrapped output size for `kept` surviving characters (only a-z0-9
+    * survive, each renders 3 bytes), computed as a long: past
+    * Int.MaxValue no byte array can hold the row, so refuse it by name
+    * instead of wrapping to a negative or short length. */
+  private[graft] def wrappedLength(kept: Int): Int = {
+    val len = 3L * kept
+    if (len > Int.MaxValue)
+      throw new IllegalArgumentException(
+        s"bpe output exceeds max array size: $len bytes for $kept kept characters")
+    len.toInt
+  }
+
   def compute(t: org.apache.spark.unsafe.types.UTF8String, wrap: Boolean)
       : org.apache.spark.unsafe.types.UTF8String = {
     val bytes = t.getBytes
@@ -747,7 +759,7 @@ object BpeNorm {
           if ((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')) kept += 1
           j += 1
         }
-        3 * kept // kept <= n/…: only a-z0-9 survive, each renders 3 bytes
+        wrappedLength(kept)
       }
     val out = new Array[Byte](outLen)
     var k = 0
@@ -1003,7 +1015,7 @@ object BloomHit {
   * the mask (file → SORTED deleted positions) rides in the expression
   * itself, so the masked read stays ONE codegen'd scan-filter pipeline
   * instead of a scan → broadcast-anti-join break — measured 3× on a
-  * fully-masked 8M-row table (MorPlanProbe; the join's per-row
+  * fully-masked 8M-row table (NOTES_r15.md §5; the join's per-row
   * (string, long) key hashing was the cost, a binary search against a
   * cached per-file array is not). Delta evaluates its DV bitmaps
   * inside the reader for exactly this reason; this expression is that

@@ -725,11 +725,11 @@ object DedupOps {
     * two engines cross-check the RESULT, not each other's iteration
     * count. */
   val dedupClusterReps: Q = (s, dir) => {
-    // MEASURED (round 7, graft.tools.CcBench, sf0.1 post-mod-p graph:
-    // 13,958 edges / 2,138 clustered docs): min-label propagation
-    // steady-state 1.5-1.7 s vs star contraction 2.4-2.6 s — the star
-    // twin's per-alternation edge rewrite (two symmetrize+groupBy+
-    // distinct rounds) costs more than propagation's label joins on
+    // MEASURED (round 7, NOTES_r7.md "CC algorithm choice", sf0.1
+    // post-mod-p graph: 13,958 edges / 2,138 clustered docs): min-label
+    // propagation steady-state 1.5-1.7 s vs star contraction 2.4-2.6 s
+    // — the star twin's per-alternation edge rewrite (two
+    // symmetrize+groupBy+distinct rounds) costs more than propagation's label joins on
     // shallow LSH components (6 alternations vs ~4 jump rounds). Star
     // stays the documented adversarial-chain upgrade, NOT the default.
     val verified = dedupMinhashLsh(s, dir)

@@ -1794,7 +1794,7 @@ object MigrationOps {
     * row-counted. */
   val csvIngest: Q = (s, _) =>
     s.read.option("header", "true").schema("id INT, name INT")
-      .csv("/root/reference/tests/migrations_seq/test.csv.gz")
+      .csv(graft.Fixtures.seqCsv)
       .agg(count(lit(1)).as("n_total"),
         count(when(col("name") > 3000, 1)).as("n_gt3000"))
 
@@ -1826,7 +1826,7 @@ object MigrationOps {
         s"CREATE TABLE $db.sample(id UInt32, name UInt32) ENGINE MergeTree PARTITION BY tuple() ORDER BY tuple()")
       graft.migrator.Migrator.migrate(s, db, home, s"$scratch/ledger")
       s.read.option("header", "true").schema("id INT, name INT")
-        .csv("/root/reference/tests/migrations_seq/test.csv.gz")
+        .csv(graft.Fixtures.seqCsv)
         .write.mode("append").insertInto(s"$db.sample")
       Files.writeString(Paths.get(s"$home/V2_seq_dmls.json"),
         s"""["ALTER TABLE $db.sample ADD COLUMN enabled UInt32 DEFAULT 1",
@@ -2322,20 +2322,20 @@ object MigrationOps {
            FROM v0 o FULL OUTER JOIN v1 n ON o.key = n.key)
          WHERE op IS NOT NULL""",
     "csv_ingest" ->
-      """SELECT COUNT(*) AS n_total,
+      s"""SELECT COUNT(*) AS n_total,
          COUNT(CASE WHEN name > 3000 THEN 1 END) AS n_gt3000
-         FROM read_csv_auto('/root/reference/tests/migrations_seq/test.csv.gz')""",
+         FROM read_csv_auto('${graft.Fixtures.seqCsvPath}')""",
     // the masked-update CASE chain replayed over the raw CSV: enabled
     // is 0 exactly where name > 3000 (statement 3 over statement 1's
     // DEFAULT 1), guard then copies enabled's partition (statements 4+5
     // over statement 2's DEFAULT -1), and versions = the two fixture
     // migrations the ledger must have applied
     "migrate_seq_counts" ->
-      """WITH mig AS (
+      s"""WITH mig AS (
            SELECT id, name,
              CASE WHEN name > 3000 THEN 0 ELSE 1 END AS enabled,
              CASE WHEN name > 3000 THEN 0 ELSE 1 END AS guard
-           FROM read_csv_auto('/root/reference/tests/migrations_seq/test.csv.gz'))
+           FROM read_csv_auto('${graft.Fixtures.seqCsvPath}'))
          SELECT COUNT(*) AS total,
            COUNT(CASE WHEN name > 3000 THEN 1 END) AS gt3000,
            COUNT(CASE WHEN enabled = 0 THEN 1 END) AS enabled0,

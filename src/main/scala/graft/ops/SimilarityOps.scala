@@ -333,10 +333,10 @@ object SimilarityOps {
     * [[annIvfCentroid]]'s contrast note names, now implemented and
     * gate-checked: [[annIvfKmeans]]'s in-row literal fold renders the
     * model as CODE, and every planning phase that walks the tree pays
-    * for it — measured in [[graft.tools.AssignRegimeBench]], the
-    * literal plan costs ~57 s of pure pre-first-row overhead at
-    * K=16384 (27 MB of rendered SQL), 30× this regime's ~1.9 s and
-    * linear in K. Here the trained model
+    * for it — measured in SCALING.md §"IVF assignment regimes" (round
+    * 14, NOTES_r14.md), the literal plan costs ~57 s of pure
+    * pre-first-row overhead at K=16384 (27 MB of rendered SQL), 30×
+    * this regime's ~1.9 s and linear in K. Here the trained model
     * travels as DATA: one broadcast ROW holding the k-ascending
     * `array<struct<k, c, n2>>`, appended to every corpus partition via
     * the repo's scalar-broadcast pattern (crossJoin of a 1-row
@@ -581,14 +581,18 @@ object SimilarityOps {
         (0 until m).map(mm =>
           (mm, id, centered.slice(subDim * mm, subDim * (mm + 1)): Seq[Double]))
       })
-    for (_ <- 1 to PqIters) {
-      val assigned = subs.withColumn("code",
-        expr(pqAssignFold(s, s"${pqCbLit(cb)}[m]", "sv")))
-      cb = rekey(assigned.groupBy("m", "code")
-        .agg(array((0 until subDim).map(i => round(avg(expr(s"sv[$i]")), 6)): _*).as("c"))
-        .collect().toSeq
-        .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
-    }
+    // the codebooks are collected to the driver every round, so nothing
+    // returned still reads `subs`: release it once the loop is done
+    try {
+      for (_ <- 1 to PqIters) {
+        val assigned = subs.withColumn("code",
+          expr(pqAssignFold(s, s"${pqCbLit(cb)}[m]", "sv")))
+        cb = rekey(assigned.groupBy("m", "code")
+          .agg(array((0 until subDim).map(i => round(avg(expr(s"sv[$i]")), 6)): _*).as("c"))
+          .collect().toSeq
+          .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
+      }
+    } finally { subs.unpersist(); () }
     (mu, cb)
   }
 
@@ -756,8 +760,9 @@ object SimilarityOps {
   /** [[annPqRerank]] with the shortlist width as a parameter — the one
     * serving knob the two-stage plan exposes (wider = more raw-vector
     * point lookups per query, higher recall ceiling). The catalog entry
-    * pins width = [[PqShortlist]]; [[graft.tools.PqWidthStudy]] sweeps
-    * it to measure the recall/IO frontier. */
+    * pins width = [[PqShortlist]]; the recall/IO frontier over widths
+    * 5..100 is recorded in SCALING.md §"PQ shortlist-width frontier"
+    * (round 8). */
   private[graft] def pqRerankWidth(
       s: SparkSession, dir: String, width: Int,
       dims: Int = 64, m: Int = PqM, subDim: Int = PqSubDim): DataFrame = {

@@ -827,9 +827,10 @@ object TextOps {
     * over the documents scan (training's aggregates ran eagerly in
     * [[bpeTrain]]). */
   /** The merge chain as an expr STRING over `v` (a lambda variable or
-    * column name) — THE production rendered tokenizer; BpeProbe and
-    * BpeSpec call this same builder so their codegen/cost/fixed-point
-    * answers cover exactly what the entries run. */
+    * column name) — THE production rendered tokenizer; BpeSpec calls
+    * this same builder so its codegen/fixed-point answers cover exactly
+    * what the entries run (the 16-round × 1M-word stress run is
+    * recorded in NOTES_r9.md "BPE stress probe"). */
   private[graft] def bpeChainExpr(merges: Seq[(String, String, Long)],
       v: String = "w", preAtomized: Boolean = false): String =
     merges.foldLeft(
@@ -1711,13 +1712,14 @@ object TextOps {
     // corpus-sized Generate pass.
     // r20 (VERDICT item 2): the r19 claim that ab's exchange would be
     // REUSED for the re-aggregation was measured FALSE — the executed
-    // plan (StageReuseProbe, walking QueryStageExec leaves) showed the
-    // ab subtree computed twice (3 corpus Generates, 0 ReusedExchange:
-    // AQE's stage cache did not unify the two canonically-distinct agg
-    // subtrees). The in-query persist makes the sharing explicit: ab is
-    // VOCABULARY-sized (the whole point of the r19 derivation), so
-    // caching it is a few counters per distinct bigram, and the query
-    // drops to its 2-corpus-Generate floor (count pass + probe pass).
+    // plan (walked through QueryStageExec leaves; OPTIMIZATION_r20.md
+    // §2) showed the ab subtree computed twice (3 corpus Generates, 0
+    // ReusedExchange: AQE's stage cache did not unify the two
+    // canonically-distinct agg subtrees). The in-query persist makes
+    // the sharing explicit: ab is VOCABULARY-sized (the whole point of
+    // the r19 derivation), so caching it is a few counters per distinct
+    // bigram, and the query drops to its 2-corpus-Generate floor (count
+    // pass + probe pass).
     // Plan evidence: plans/r20/text_bigram_logprob_{before,after}.txt
     // (3 Generates + 4 exchanges -> 2 Generates, ab subtree once).
     // r20 A/B record (interleaved same-JVM medians at sf0.1): the
@@ -1777,6 +1779,7 @@ object TextOps {
       .withColumn("item",
         when(col("u") < 512, concat(lit("hot_"), expr("cast(u div 64 as string)")))
           .otherwise(concat(lit("rare_"), col("u").cast("string"))))
+      .select(col("doc_id"), col("tk"), col("item"))
   }
 
   /** Exact heavy hitters: full groupBy + 1-row-total broadcast compare.

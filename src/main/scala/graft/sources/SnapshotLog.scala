@@ -469,9 +469,9 @@ object SnapshotLog {
   /** Masks holding at most this many POSITIONS ride INSIDE the plan
     * as a [[graft.functions.DvMaskHit]] filter (one codegen'd
     * scan-filter pipeline, ~3× the anti-join's masked-read throughput
-    * — MorPlanProbe); bigger masks keep the broadcast anti-join,
-    * which is exactly the machinery built for a build side too big to
-    * ship with the plan. Gated on the sidecars' footer ROW COUNTS
+    * — NOTES_r15.md §5, PLANS_r15.md); bigger masks keep the broadcast
+    * anti-join, which is exactly the machinery built for a build side
+    * too big to ship with the plan. Gated on the sidecars' footer ROW COUNTS
     * (cheap driver-side footer reads, no job), NOT file bytes: parquet
     * delta/dictionary encoding packs sorted (file, pos) rows 10-100×
     * denser than their in-memory form, so a byte gate would admit

@@ -560,7 +560,8 @@ private class SnapshotLogMicroBatchStream(tableDir: String, schema: StructType,
     } else SnapshotFileReaderFactory(
       Bridge.parquetFileRows(SparkSession.active, physSchema),
       // `columnar=false` is the measurement escape hatch (the
-      // SnapStreamBench row-vs-columnar A/B), not a tuning knob
+      // row-vs-columnar A/B in SCALING.md §"Snapshot-log streaming
+      // source throughput"), not a tuning knob
       if (columnar) Bridge.parquetFileBatches(SparkSession.active, physSchema)
       else None)
 
@@ -576,9 +577,9 @@ private case class SnapshotFilePartition(path: String) extends InputPartition
 /** Serves each manifest file vectorized when Spark's own
   * `supportBatch` predicate admits the schema (`readBatches` is Some —
   * the same decision a batch scan of these files would make), else row
-  * by row. The round-10 SnapStreamBench measured the row path at
-  * 1.98× a batch scan; the columnar path closes exactly that gap
-  * (re-measured in SCALING.md round 12). */
+  * by row. Round 10 measured the row path at 1.98× a batch scan; the
+  * columnar path closes exactly that gap (both readings in SCALING.md
+  * §"Snapshot-log streaming source throughput"). */
 private case class SnapshotFileReaderFactory(
     readFile: String => Iterator[InternalRow],
     readBatches: Option[String => Iterator[

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Materialize a `graft-docs` generated corpus as a testdata-shaped
   * directory (documents.parquet + the sf0.1 embeddings copied in), so
@@ -25,11 +25,7 @@ object GenCorpus {
     val (out, n) = (args(0), args(1).toLong)
     val seed = if (args.length > 2) args(2).toLong else 42L
     val vocab = if (args.length > 3) args(3).toInt else math.max(1000L, n / 5).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.format("graft-docs")
       .option("n", n).option("seed", seed).option("partitions", 32)

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import scala.collection.mutable
+
+import graft.GraftSession
 
 /** Doc-family scaling bench for SCALING.md's measured-exponent study.
   *
@@ -50,15 +50,9 @@ object ScaleBench {
     val reps = if (args.length > 1) args(1).toInt else 3
     val only = args.find(_.startsWith("only="))
       .map(_.stripPrefix("only=").split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder()
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_scale_wh_").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count() // warmup

@@ -119,9 +119,9 @@ object Bridge {
     * FileSourceScanExec uses to decide the same thing), so the
     * batch/row split here mirrors a batch scan's. Used by the
     * snapshot-log streaming source to serve micro-batches vectorized:
-    * the round-10 SnapStreamBench measured the row path at 1.98× a
-    * batch scan of the same files, and THIS is the lever that note
-    * named. */
+    * round 10 measured the row path at 1.98× a batch scan of the same
+    * files (SCALING.md §"Snapshot-log streaming source throughput"),
+    * and THIS is the lever that note named. */
   def parquetFileBatches(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       // advisory v1 filters for row-group/page skipping, exactly as on

@@ -243,8 +243,8 @@ private object SnapAggReaderFactory extends PartitionReaderFactory {
   *    the re-push only reaches the reader because [[toBatch]] returns
   *    a delegating Batch and [[columnarSupportMode]] answers without
   *    forcing the reader factory during planning (see both docs;
-  *    graft.tools.RowGroupProbe measures 262144 → 5040 rows scanned
-  *    on a one-file/many-row-group layout, and
+  *    NOTES_r15.md §1 records 262144 → 5040 rows scanned on a
+  *    one-file/many-row-group layout, and
   *    SnapshotRuntimePruneSpec pins the metric). An untranslatable
   *    runtime predicate leaves the scan untouched; an EMPTY dim's
   *    values-less IN prunes to zero files (`x IN ()` is false).

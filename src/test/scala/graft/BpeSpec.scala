@@ -92,4 +92,12 @@ class BpeSpec extends SparkSpec {
     val b = fallback.collect().map(_.toSeq).toSet
     assert(a.nonEmpty && a == b)
   }
+
+  test("bpe_norm's wrapped size is computed as a long and refused past Int.MaxValue") {
+    import graft.functions.BpeNorm.wrappedLength
+    assert(wrappedLength(0) == 0)
+    assert(wrappedLength(Int.MaxValue / 3) == Int.MaxValue / 3 * 3)
+    val e = intercept[IllegalArgumentException](wrappedLength(Int.MaxValue / 3 + 1))
+    assert(e.getMessage.contains("bpe output exceeds max array size"), e.getMessage)
+  }
 }

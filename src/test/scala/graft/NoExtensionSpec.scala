@@ -120,6 +120,10 @@ class NoExtensionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cms = SparkEntry.queries("text_heavy_hitters_cms")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(cms == exact)
+    // the fallback item column leaves the same schema as the native one
+    assert(!spark.catalog.functionExists("hh_item"))
+    assert(ops.TextOps.hhItems(spark, sfDir).columns.toSeq ==
+      Seq("doc_id", "tk", "item"))
   }
 
   test("the streaming frequent-items twin degrades to exact streaming candidates") {

@@ -171,8 +171,8 @@ class SnapshotRuntimePruneSpec extends SparkSpec {
     // may cache during planning, and only the delegating-batch +
     // columnarSupportMode arrangement (PrunedSnapshotScan) defers the
     // factory past filter() so the runtime IN lands in the reader's
-    // pushed filters. Measured by graft.tools.RowGroupProbe (262144 →
-    // 5040 rows without/with); pinned here at spec scale: one file,
+    // pushed filters. Measured in NOTES_r15.md §1 (262144 → 5040 rows
+    // without/with); pinned here at spec scale: one file,
     // many tight row groups, so file pruning CANNOT explain a low
     // scan-output metric — only row-group skipping can.
     registered()

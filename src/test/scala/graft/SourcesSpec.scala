@@ -12,7 +12,7 @@ class SourcesSpec extends SparkSpec {
     // reference: tests/test_clickhouse_migration.py:101 — gunzip | bulk
     // insert of 100k rows with header id,name
     val df = spark.read.option("header", "true").schema("id INT, name INT")
-      .csv("/root/reference/tests/migrations_seq/test.csv.gz")
+      .csv(Fixtures.seqCsv)
     assert(df.count() == 100000L)
     assert(df.filter(col("id").isNull || col("name").isNull).count() == 0)
   }

@@ -11,15 +11,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val scratch: String = Files.createTempDirectory("graft_test_").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
+  // re-pinned to local[4] / 4 partitions whatever SPARK_GRAFT_CPUS
+  // says: the plan-shape pins depend on these values
+  lazy val spark: SparkSession = GraftSession.builder()
     .master("local[4]")
     .appName(getClass.getSimpleName)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
     .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = {
