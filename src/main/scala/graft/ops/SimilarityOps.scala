@@ -674,7 +674,7 @@ object SimilarityOps {
   /** The shared flat-ADC stage — (qid, nid, adc6) for every query ×
     * corpus-code pair, plus the raw-vector scan for downstream rerank.
     * ONE definition feeds both [[annPqTopk]] (top-3 directly) and
-    * [[pqRerankWidth]] (shortlist stage), so the ADC indexing and
+    * [[pqRerank]] (shortlist stage), so the ADC indexing and
     * rounding cannot drift between the twins.
     *
     * The query stays RAW: ADC = ⟨q, x̂−μ⟩ = ⟨q, x̂⟩ − ⟨q, μ⟩, and the
@@ -755,21 +755,20 @@ object SimilarityOps {
     * reads codes; full vectors are touched for 1000 rows total. This
     * two-stage shape is the standard IVF-PQ serving plan (Jégou et al.
     * 2011 §V: ADC + verification). */
-  val annPqRerank: Q = (s, dir) => pqRerankWidth(s, dir, PqShortlist)
+  val annPqRerank: Q = (s, dir) => pqRerank(s, dir)
 
-  /** [[annPqRerank]] with the shortlist width as a parameter — the one
-    * serving knob the two-stage plan exposes (wider = more raw-vector
-    * point lookups per query, higher recall ceiling). The catalog entry
-    * pins width = [[PqShortlist]]; the recall/IO frontier over widths
-    * 5..100 is recorded in SCALING.md §"PQ shortlist-width frontier"
-    * (round 8). */
-  private[graft] def pqRerankWidth(
-      s: SparkSession, dir: String, width: Int,
+  /** [[annPqRerank]] over a given code layout, so the truncated-prefix
+    * probe ([[annMrlPqTopk]]) runs the same two stages. The shortlist
+    * is [[PqShortlist]] deep; the recall/IO frontier over widths
+    * 5..100 that chose it is recorded in SCALING.md §"PQ
+    * shortlist-width frontier" (round 8). */
+  private[graft] def pqRerank(
+      s: SparkSession, dir: String,
       dims: Int = 64, m: Int = PqM, subDim: Int = PqSubDim): DataFrame = {
     val (scored, raw) = pqAdcScored(s, dir, dims, m, subDim)
     val wAdc = Window.partitionBy("qid").orderBy(col("adc6").desc, col("nid"))
     val shortlist = scored.withColumn("srk", row_number().over(wAdc))
-      .filter(col("srk") <= width).select("qid", "nid")
+      .filter(col("srk") <= PqShortlist).select("qid", "nid")
     val qv = raw.filter(col("vec_id") < PqQueryCount)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val reranked = shortlist
@@ -899,7 +898,7 @@ object SimilarityOps {
     * truncation costs index size and scan IO, never final-score
     * fidelity. This is the serving shape [[annMrlTopk]]'s scaladoc
     * promises ("the PQ-rerank composition applies unchanged"), realized
-    * through the SAME [[pqAdcScored]]/[[pqRerankWidth]] definitions as
+    * through the SAME [[pqAdcScored]]/[[pqRerank]] definitions as
     * `ann_pq_rerank` (one code path, so ADC indexing and rounding
     * cannot drift between the compression-triad members), with
     * [[annMrlTopk]] itself remaining the bounded brute-force AUDIT of
@@ -910,7 +909,7 @@ object SimilarityOps {
     * records its recall beside int8/PQ-64 in the bits-vs-recall
     * triad. */
   val annMrlPqTopk: Q = (s, dir) =>
-    pqRerankWidth(s, dir, PqShortlist, MrlDim, MrlPqM, MrlPqSubDim)
+    pqRerank(s, dir, MrlDim, MrlPqM, MrlPqSubDim)
 
   /** Persist the full IVF-PQ serving index — the `writeBandIndex` /
     * `writeVocabIndex` / `writeNgramIndex` move for the ANN family,
@@ -1457,7 +1456,7 @@ object SimilarityOps {
   }
 
   /** Shared shortlist-then-exact-rerank oracle, parameterized the same
-    * way as [[pqRerankWidth]]: defaults render `ann_pq_rerank`'s text;
+    * way as [[pqRerank]]: defaults render `ann_pq_rerank`'s text;
     * the MRL arguments render the truncate-then-PQ composition. The
     * rerank CTE always joins back to `e0`'s FULL vectors — exact
     * final scores at the original width in both instantiations. */

@@ -62,11 +62,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * version-bounded form; `startingTimestamp` is exclusive with
   * `startVersion`, `endingTimestamp` stops the stream after its
   * resolved version), `ignoreChanges` (default false),
-  * `columnar` (default true — `false` is the measurement escape
-  * hatch, not a tuning knob), `maxVersionsPerTrigger` (admission
-  * control — at most N versions advance per micro-batch, so a fresh
-  * checkpoint on a deep history backfills in ⌈backlog/N⌉ bounded
-  * batches instead of one giant epoch; honored by
+  * `maxVersionsPerTrigger` (admission control — at most N versions
+  * advance per micro-batch, so a fresh checkpoint on a deep history
+  * backfills in ⌈backlog/N⌉ bounded batches instead of one giant
+  * epoch; honored by
   * `Trigger.AvailableNow`, which drains to a start-of-run head
   * snapshot and stops; inherited by the `.changes` stream), and
   * `changeFeed` (default false): the
@@ -235,7 +234,6 @@ private[sources] object SnapshotStreamBuild {
       tableDir, schema,
       tsStartV.getOrElse(options.getLong("startVersion", 0L)),
       ignore,
-      options.getBoolean("columnar", true),
       changeFeed,
       endVersion = tsEndV,
       maxVersionsPerTrigger = maxVersions)
@@ -335,7 +333,6 @@ private[graft] object ChangeFeed {
 
 private class SnapshotLogMicroBatchStream(tableDir: String, schema: StructType,
     startVersion: Long, ignoreChanges: Boolean,
-    columnar: Boolean = true,
     changeFeed: Boolean = false,
     // resolved from endingTimestamp at stream build: the stream stops
     // ADVANCING past this version (versions committed later — whatever
@@ -554,16 +551,12 @@ private class SnapshotLogMicroBatchStream(tableDir: String, schema: StructType,
         Bridge.parquetFileRows(spark, idxSchema),
         Bridge.parquetFileRows(spark,
           StructType.fromDDL("file STRING, pos BIGINT")),
-        if (columnar) Bridge.parquetFileBatches(spark, physSchema) else None,
+        Bridge.parquetFileBatches(spark, physSchema),
         physSchema.fields.map(_.dataType),
         physSchema.fields.map(_.nullable))
     } else SnapshotFileReaderFactory(
       Bridge.parquetFileRows(SparkSession.active, physSchema),
-      // `columnar=false` is the measurement escape hatch (the
-      // row-vs-columnar A/B in SCALING.md §"Snapshot-log streaming
-      // source throughput"), not a tuning knob
-      if (columnar) Bridge.parquetFileBatches(SparkSession.active, physSchema)
-      else None)
+      Bridge.parquetFileBatches(SparkSession.active, physSchema))
 
   override def deserializeOffset(json: String): Offset =
     new VersionOffset(json.toLong)

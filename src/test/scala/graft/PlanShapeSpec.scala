@@ -536,7 +536,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("ann_mrl_pq_topk shares the PQ serving shape: bounded ADC scan, hash-join rerank") {
     // the composed truncate-then-PQ probe runs through the SAME
-    // pqAdcScored/pqRerankWidth definitions as ann_pq_rerank, so its
+    // pqAdcScored/pqRerank definitions as ann_pq_rerank, so its
     // plan must show the same two stages: the bounded 50-query ADC
     // code scan (audit-class BNLJ over 2-byte codes, not raw vectors)
     // and hash-join point-lookups for the full-width exact rerank

@@ -17,6 +17,21 @@ class SourcesSpec extends SparkSpec {
     assert(df.filter(col("id").isNull || col("name").isNull).count() == 0)
   }
 
+  test("the seq CSV generator is a pure function of (rows, seed) and counts name > 3000") {
+    val a = java.nio.file.Paths.get(s"$scratch/seq_a.csv.gz")
+    val b = java.nio.file.Paths.get(s"$scratch/seq_b.csv.gz")
+    val over = Fixtures.writeSeqCsv(a, 2000, 3L)
+    assert(Fixtures.writeSeqCsv(b, 2000, 3L) == over)
+    assert(java.util.Arrays.equals(
+      java.nio.file.Files.readAllBytes(a), java.nio.file.Files.readAllBytes(b)))
+    val df = spark.read.option("header", "true").schema("id INT, name INT")
+      .csv(a.toString)
+    assert(df.count() == 2000L)
+    assert(df.filter(col("name") > 3000).count() == over)
+    assert(df.agg(min("name"), max("name")).head().toSeq
+      .forall(v => (0 to 100000).contains(v.asInstanceOf[Int])))
+  }
+
   test("json and orc roundtrips preserve rows and schema") {
     val src = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     src.write.mode("overwrite").json(s"$scratch/c_json")

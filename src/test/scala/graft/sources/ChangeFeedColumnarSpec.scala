@@ -28,8 +28,7 @@ class ChangeFeedColumnarSpec extends graft.SparkSpec {
         StructField(ChangeFeed.ChangeTypeCol, StringType, nullable = false),
         StructField(ChangeFeed.CommitVersionCol, LongType, nullable = false)))
     val ms = new SnapshotLogMicroBatchStream(t, exposed,
-      startVersion = 0L, ignoreChanges = false, columnar = true,
-      changeFeed = true)
+      startVersion = 0L, ignoreChanges = false, changeFeed = true)
     // (−1, 1]: two append versions, insert-only — every partition
     // answers columnar
     val parts = ms.planInputPartitions(new VersionOffset(-1), new VersionOffset(1))
